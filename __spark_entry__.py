@@ -44,15 +44,15 @@ def _prep(spark: SparkSession) -> None:
 
 def _fixtures_pipeline(spark: SparkSession):
     from entity_extraction_svc_spark.fixtures import ensure_fixtures
-    from entity_extraction_svc_spark.plans.pipeline import build_pipeline
+    from entity_extraction_svc_spark.plans.fused import build_kg
 
     key = id(spark)
     if key not in _PIPELINE_CACHE:
         _prep(spark)
         ensure_fixtures(FIXTURES)
         _PIPELINE_CACHE.clear()
-        _PIPELINE_CACHE[key] = build_pipeline(
-            spark, f"{FIXTURES}/pages.parquet", FIXTURES
+        _PIPELINE_CACHE[key] = build_kg(
+            spark, spark.read.parquet(f"{FIXTURES}/pages.parquet"), FIXTURES
         )
     return _PIPELINE_CACHE[key]
 
@@ -62,7 +62,7 @@ def entry(spark: SparkSession) -> DataFrame:
     table mapped to the pages shape (text source), with the fixture KB;
     return a per-document summary (one row per doc, stable schema)."""
     from entity_extraction_svc_spark.fixtures import ensure_fixtures
-    from entity_extraction_svc_spark.plans.pipeline import build_pipeline_df
+    from entity_extraction_svc_spark.plans.fused import build_kg
 
     _prep(spark)
     ensure_fixtures(FIXTURES)
@@ -84,7 +84,7 @@ def entry(spark: SparkSession) -> DataFrame:
         pages.schema,
     )
     pages = pages.unionByName(payloads)
-    arts = build_pipeline_df(spark, pages, FIXTURES, source="text")
+    arts = build_kg(spark, pages, FIXTURES, source="text")
     mentions = arts.mentions.groupBy("url").agg(F.count("*").alias("n_mentions"))
     linked = (
         arts.linked.filter((F.col("rank") == 0) & F.col("qid").isNotNull())
@@ -129,8 +129,9 @@ def _kg_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _kg_linked_top1_fused(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The production (fused, shuffle-free) plan against the same goldens —
-    the driver gate validates both plans, not just the staged one."""
+    """``build_fused`` itself — the entry point the runner, lineage and
+    streaming paths call — against the same goldens as kg_linked_top1
+    (which reads the ``build_kg`` tables)."""
     from entity_extraction_svc_spark.fixtures import ensure_fixtures
     from entity_extraction_svc_spark.plans.fused import build_fused
 

@@ -39,20 +39,6 @@ EXTRACTED = StructType(
     ]
 )
 
-# ---- doc -> chunk explode (reference ner_chunker.py:67-179) ----------------
-SENT_OFFSET = StructType(
-    [StructField("s", IntegerType(), False), StructField("e", IntegerType(), False)]
-)
-CHUNKS = StructType(
-    [
-        StructField("url", StringType(), False),
-        StructField("chunk_id", IntegerType(), False),
-        StructField("chunk_text", StringType(), False),
-        StructField("sentences", ArrayType(StringType()), False),
-        StructField("sentences_offsets", ArrayType(SENT_OFFSET), False),
-    ]
-)
-
 # ---- mention rows (after NER decode + doc-offset merge) --------------------
 TAG_PROBA = StructType(
     [StructField("proba", DoubleType(), False), StructField("tag", StringType(), False)]

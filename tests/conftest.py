@@ -31,7 +31,8 @@ def fixture_dir():
 
 @pytest.fixture(scope="session")
 def pipeline(spark, fixture_dir):
-    """The full pipeline artifacts over the committed 200-doc fixture set."""
-    from entity_extraction_svc_spark.plans.pipeline import build_pipeline
+    """The KG build tables over the committed 200-doc fixture set."""
+    from entity_extraction_svc_spark.plans.fused import build_kg
 
-    return build_pipeline(spark, f"{fixture_dir}/pages.parquet", fixture_dir)
+    return build_kg(spark, spark.read.parquet(f"{fixture_dir}/pages.parquet"),
+                    fixture_dir)

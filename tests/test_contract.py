@@ -16,6 +16,9 @@ FAST = [
     "rel_agg", "rel_joins",
     "kg_intersection", "doc_profile", "doc_pii", "doc_split",
     "dedup_simhash", "sim_cosine_topk", "kb_ingest",
+    # fixture-backed KG rows on the fused pass
+    "kg_extract_text", "kg_mentions", "kg_linked_top1",
+    "kg_linked_top1_fused", "kg_triples", "kg_annotations",
 ]
 
 
@@ -42,3 +45,14 @@ def test_query_matches_oracle(spark, con, name):
     assert list(sdf.columns) == list(odf.columns)
     assert len(sdf) == len(odf)
     pd.testing.assert_frame_equal(sdf, odf, check_dtype=False, check_exact=True)
+
+
+def test_entry_flagship(spark):
+    """entry(): one summary row per sf0.001 document plus the two reference
+    payloads, which link every mention they detect."""
+    rows = entry_mod.entry(spark).collect()
+    assert len(rows) == 502
+    payloads = {r.url: (r.n_chars, r.n_mentions, r.n_linked)
+                for r in rows if r.url.startswith("payload://")}
+    assert payloads == {"payload://mona_lisa": (104, 4, 4),
+                        "payload://spacex": (201, 6, 6)}

@@ -55,13 +55,6 @@ def test_cosine_topk_plan(spark):
     assert "PushedFilters: [IsNotNull(vec_id), Not(EqualTo(vec_id,0))]" in plan
 
 
-def test_eltags_join_is_broadcast(spark, fixture_dir, pipeline):
-    """The gazetteer dimension join must stay broadcast (never sort-merge)."""
-    plan = _plan(pipeline.mentions)
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
-
-
 def test_minhash_is_shuffle_free(spark):
     """Signature computation is row-local: no DATA-DEPENDENT exchange in
     the plan.  The one allowed exchange is the round-robin scan widening

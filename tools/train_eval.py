@@ -7,9 +7,9 @@ gate), appending a metrics-history row either way.
 The trainable model here is the NER stand-in's parameter set — the
 gazetteer: "training" learns surface -> tag from the TRAIN split's golden
 mention labels (semantically what the reference's token-tagger fine-tune
-does), entirely as Spark aggregations; evaluation runs the real
-detect-mentions path on the DEV split's pages.  A torch checkpoint slots
-into the same harness by swapping ``learn_model``/``load tagger``.
+does), entirely as Spark aggregations; evaluation runs the fused plan's
+mention pass on the DEV split's pages.  A torch checkpoint slots into the
+same harness by swapping ``learn_model``/``load tagger``.
 
 Usage: python tools/train_eval.py [fixture_dir] [model_dir]
 Prints one JSON line: {"dev_f1": ..., "prev_best": ..., "updated": bool}.
@@ -46,24 +46,17 @@ def learn_model(golden_mentions_train):
 
 
 def eval_f1(spark, pages_dev, golden_dev, gaz_rows) -> float:
-    """Mention-level F1 of the real detection path on the dev split."""
-    from pyspark.sql import functions as F
-
-    from entity_extraction_svc_spark.operators.chunker import chunk
-    from entity_extraction_svc_spark.operators.extract import extract_text
-    from entity_extraction_svc_spark.operators.ner import (
-        detect_mentions,
-        with_offset_shift,
-    )
+    """Mention-level F1 of the real detection path (the fused plan's
+    mention pass) on the dev split."""
     from entity_extraction_svc_spark.operators.tagger import SoftGazetteerTagger
+    from entity_extraction_svc_spark.plans.fused import fused_mentions
 
     tagger_bc = spark.sparkContext.broadcast(
         SoftGazetteerTagger.from_rows(gaz_rows)
     )
-    chunks = with_offset_shift(chunk(extract_text(pages_dev)))
     pred = {
         (r.url, r.substr, r.start, r.end)
-        for r in detect_mentions(chunks, tagger_bc).collect()
+        for r in fused_mentions(pages_dev, tagger_bc).collect()
     }
     gold = {
         (r.url, r.substr, r.start, r.end) for r in golden_dev.collect()
@@ -74,9 +67,16 @@ def eval_f1(spark, pages_dev, golden_dev, gaz_rows) -> float:
     return round(2 * p * r / (p + r), 4) if p + r else 0.0
 
 
+def is_dev():
+    """Deterministic 80/20 url-hash split (train.py's dataset_reader
+    analogue): True on the dev fifth."""
+    from pyspark.sql import functions as F
+
+    return F.pmod(F.xxhash64("url"), F.lit(5)) == 0
+
+
 def main() -> None:
     import pandas as pd
-    from pyspark.sql import functions as F
 
     from entity_extraction_svc_spark.session import get_spark
 
@@ -92,11 +92,10 @@ def main() -> None:
 
     pages = spark.read.parquet(f"{fixture_dir}/pages.parquet")
     golden = spark.read.parquet(f"{fixture_dir}/golden_mentions.parquet")
-    # deterministic 80/20 url-hash split (train.py's dataset_reader analogue)
-    is_dev = F.pmod(F.xxhash64("url"), F.lit(5)) == 0
-    pages_dev = pages.filter(is_dev)
-    golden_train = golden.filter(~is_dev)
-    golden_dev = golden.filter(is_dev)
+    dev = is_dev()
+    pages_dev = pages.filter(dev)
+    golden_train = golden.filter(~dev)
+    golden_dev = golden.filter(dev)
 
     candidate = learn_model(golden_train)
     cand_rows = [r.asDict() for r in candidate.collect()]
